@@ -69,20 +69,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> Table:
     return data(f"{sf_dir}/{name}.parquet", spark=spark, name=name)
 
 
-def _keep(df: DataFrame, *holders) -> DataFrame:
-    """Carry the scoped caches of intermediate pipeline results onto
-    the frame an entry actually RETURNS (r15, guide §5): deriving the
-    deterministic oracle order with a bare ``.df.orderBy(...)`` builds
-    a NEW DataFrame without the Python-side cache holder, so the
-    library's scoped persists were released at construction time and
-    the driver's timed action silently re-derived every cached subtree
-    (measured: the benched popularity plan re-scanned parquet 5x —
-    the exact naive plan the r14 scoped persists eliminated)."""
-    from blaze_spark.pipeline.dedup import carry_caches
-    return carry_caches(df, *(h.df if isinstance(h, Table) else h
-                              for h in holders))
-
-
 def _fprobe(col, scale: int = 4):
     """Export a float probe with byte-stable hashing: round, then add +0.0
     so IEEE negative zero canonicalizes to +0.0 (−0.0 + 0.0 → +0.0).
@@ -1278,7 +1264,7 @@ def neardup_dispatch_pairs(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     corpus = _planted_corpus(e)   # shared truth-bed: ~N/10 planted dups
     pairs = neardup_pairs(corpus, threshold=0.9)
-    return _keep(pairs.df.orderBy("vec_a", "vec_b"), pairs)
+    return pairs.sort("vec_a", "vec_b", na_position="first").df
 
 
 def ann_auto_topk(spark, sf_dir):
@@ -1404,7 +1390,7 @@ def pack_sequences_string_key(spark, sf_dir):
     g = by([packed.shard], n_docs=packed.doc_id.nelements(),
            total_tokens=packed.n_tokens.sum(),
            first_key=packed.skey.min(), last_key=packed.skey.max())
-    return _keep(g.df, packed)
+    return g.df
 
 
 def window_edges_per_user(spark, sf_dir):
@@ -1570,7 +1556,7 @@ def pack_sequences_docs(spark, sf_dir):
     g = by([packed.shard], n_docs=packed.doc_id.nelements(),
            total_tokens=packed.n_tokens.sum(),
            first_doc=packed.doc_id.min(), last_doc=packed.doc_id.max())
-    return _keep(g.df, packed)
+    return g.df
 
 
 def chunk_documents_docs(spark, sf_dir):
@@ -1612,9 +1598,8 @@ def pack_tokenized_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     vt = VocabTokenizer(_TOK_VOCAB, fallback_chars=4)
     packed = pack_sequences(d, budget=512, partitions=4, tokenizer=vt)
-    return _keep(packed.df.select("doc_id", "n_tokens", "tok_start",
-                                  "shard")
-                 .orderBy("doc_id"), packed)
+    return (packed[["doc_id", "n_tokens", "tok_start", "shard"]]
+            .sort("doc_id", na_position="first").df)
 
 
 def chunk_tokenized_docs(spark, sf_dir):
@@ -1650,9 +1635,8 @@ def pack_bpe_docs(spark, sf_dir):
                         ("s", "c"), ("sc", "an")])
     packed = pack_sequences(d, budget=4096, partitions=4,
                             tokenizer=bpe)
-    return _keep(packed.df.select("doc_id", "n_tokens", "tok_start",
-                                  "shard")
-                 .orderBy("doc_id"), packed)
+    return (packed[["doc_id", "n_tokens", "tok_start", "shard"]]
+            .sort("doc_id", na_position="first").df)
 
 
 def pack_wordpiece_docs(spark, sf_dir):
@@ -1672,9 +1656,8 @@ def pack_wordpiece_docs(spark, sf_dir):
          "##er", "##ed", "##e", "##r", "##n", "##t"])
     packed = pack_sequences(d, budget=4096, partitions=4,
                             tokenizer=wp)
-    return _keep(packed.df.select("doc_id", "n_tokens", "tok_start",
-                                  "shard")
-                 .orderBy("doc_id"), packed)
+    return (packed[["doc_id", "n_tokens", "tok_start", "shard"]]
+            .sort("doc_id", na_position="first").df)
 
 
 def word_frequencies_docs(spark, sf_dir):
@@ -1757,7 +1740,7 @@ def training_shards_pipeline(spark, sf_dir):
            n_docs=packed.doc_id.nunique(),
            total_tokens=packed.n_tokens.sum(),
            first_chunk=packed.chunk_key.min())
-    return _keep(g.df, packed)
+    return g.df
 
 
 def consistency_incremental_minhash(spark, sf_dir):
@@ -3093,7 +3076,7 @@ def ngram_lm_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     out = ngram_lm_logprob(d, n_buckets=1024, n=2)
-    return _keep(out.orderBy("doc_id"), out)
+    return Table(out).sort("doc_id", na_position="first").df
 
 
 def perplexity_filter_docs(spark, sf_dir):
@@ -3108,8 +3091,9 @@ def perplexity_filter_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = perplexity_filter(d, n_buckets=1024, n=2,
                             min_ppl=19.0, max_ppl=37.0)
-    return _keep(out.select("doc_id", "source", "n_grams", "logp",
-                            "avg_logp", "ppl").orderBy("doc_id"), out)
+    return (Table(out)[["doc_id", "source", "n_grams", "logp",
+                        "avg_logp", "ppl"]]
+            .sort("doc_id", na_position="first").df)
 
 
 def winnow_fingerprints_docs(spark, sf_dir):
@@ -3138,7 +3122,7 @@ def winnow_candidates_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     out = winnow_candidates(d, k=3, w=4, min_shared=2, max_bucket=1000)
-    return _keep(out.df.orderBy("doc_a", "doc_b"), out)
+    return out.sort("doc_a", "doc_b", na_position="first").df
 
 
 def bm25_topk_docs(spark, sf_dir):
@@ -3155,7 +3139,7 @@ def bm25_topk_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = bm25_topk(d, ["table scan fast", "spark stream window",
                         "customer order query"], k=10)
-    return _keep(out.df.orderBy("query_id", "doc_id"), out)
+    return out.sort("query_id", "doc_id", na_position="first").df
 
 
 def c4_clean_docs(spark, sf_dir):
@@ -3200,8 +3184,9 @@ def perplexity_buckets_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     out = perplexity_buckets(d, n_buckets=1024, n=2, by_col="lang")
-    return _keep(out.select("doc_id", "lang", "n_grams", "ppl",
-                            "ppl_bucket").orderBy("doc_id"), out)
+    return (Table(out)[["doc_id", "lang", "n_grams", "ppl",
+                        "ppl_bucket"]]
+            .sort("doc_id", na_position="first").df)
 
 
 def ngram_lm_backoff_docs(spark, sf_dir):
@@ -3222,8 +3207,9 @@ def ngram_lm_backoff_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = perplexity_filter(d, n_buckets=1024, n=2, backoff=0.4,
                             min_ppl=16.5, max_ppl=19.5)
-    return _keep(out.select("doc_id", "source", "n_grams", "logp",
-                            "avg_logp", "ppl").orderBy("doc_id"), out)
+    return (Table(out)[["doc_id", "source", "n_grams", "logp",
+                        "avg_logp", "ppl"]]
+            .sort("doc_id", na_position="first").df)
 
 
 def ngram_lm_kn_docs(spark, sf_dir):
@@ -3247,8 +3233,9 @@ def ngram_lm_kn_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = perplexity_filter(d, n_buckets=1024, n=2, kneser_ney=0.75,
                             min_ppl=17.0, max_ppl=18.5)
-    return _keep(out.select("doc_id", "source", "n_grams", "logp",
-                            "avg_logp", "ppl").orderBy("doc_id"), out)
+    return (Table(out)[["doc_id", "source", "n_grams", "logp",
+                        "avg_logp", "ppl"]]
+            .sort("doc_id", na_position="first").df)
 
 
 def train_unigram_docs(spark, sf_dir):
@@ -3332,11 +3319,11 @@ def semantic_dedup_embeddings(spark, sf_dir):
     k = max(8, e.df.count() // 250)
     out = semantic_dedup(e, threshold=0.98, k_cells=k,
                          kmeans_iters=3)
-    # r16: the tagged-corpus cache is scoped to the result — carry it
-    # through the oracle-order derivation so the timed plan reads it
-    return _keep(out.df.select("vec_id", "cell", "cluster_id",
-                               F.col("keep").cast("int").alias("keep"))
-                 .orderBy("vec_id"), out)
+    # the tagged-corpus cache is scoped to the result; Table ops carry
+    # it through the oracle-order derivation so the timed plan reads it
+    return (out[["vec_id", "cell", "cluster_id",
+                 F.col("keep").cast("int").alias("keep")]]
+            .sort("vec_id", na_position="first").df)
 
 
 def bloom_two_phase_decontam_docs(spark, sf_dir):
@@ -3359,7 +3346,7 @@ def bloom_two_phase_decontam_docs(spark, sf_dir):
     rep = bloom_two_phase_contamination(corpus, deny, n=2,
                                         threshold=0.2,
                                         m_bits=1 << 16, k=5)
-    return _keep(rep.orderBy("doc_id"), rep)
+    return Table(rep).sort("doc_id", na_position="first").df
 
 
 def blaze_client_pq(spark, sf_dir):
@@ -3410,8 +3397,9 @@ def ngram_lm_backoff3_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = perplexity_filter(d, n_buckets=1024, n=3, backoff=0.4,
                             min_ppl=1.8, max_ppl=2.0)
-    return _keep(out.select("doc_id", "source", "n_grams", "logp",
-                            "avg_logp", "ppl").orderBy("doc_id"), out)
+    return (Table(out)[["doc_id", "source", "n_grams", "logp",
+                        "avg_logp", "ppl"]]
+            .sort("doc_id", na_position="first").df)
 
 
 def pack_sep_docs(spark, sf_dir):
@@ -3428,7 +3416,7 @@ def pack_sep_docs(spark, sf_dir):
     g = by([packed.shard], n_docs=packed.doc_id.nelements(),
            total_tokens=packed.n_tokens.sum(),
            first_doc=packed.doc_id.min(), last_doc=packed.doc_id.max())
-    return _keep(g.df, packed)
+    return g.df
 
 
 def ngram_lm_interp_docs(spark, sf_dir):
@@ -3449,8 +3437,9 @@ def ngram_lm_interp_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     out = perplexity_filter(d, n_buckets=1024, n=2, interpolate=0.5,
                             min_ppl=20.0, max_ppl=21.5)
-    return _keep(out.select("doc_id", "source", "n_grams", "logp",
-                            "avg_logp", "ppl").orderBy("doc_id"), out)
+    return (Table(out)[["doc_id", "source", "n_grams", "logp",
+                        "avg_logp", "ppl"]]
+            .sort("doc_id", na_position="first").df)
 
 
 def blaze_client_dedup(spark, sf_dir):
@@ -3846,10 +3835,9 @@ def cluster_mix_docs(spark, sf_dir):
     tagged = assign_clusters(d, e, k_cells=8, seed=42)
     w = temperature_source_mix(tagged, alpha=0.5, source_col="cell")
     kept = apply_source_mix(tagged, w, source_col="cell")
-    # r16: the scoped (id, cell) cache rides on tagged — carry it so
-    # both mixture arms of the timed plan read it (not 2 assign UDFs)
-    return _keep(kept.df.select("doc_id", "cell").orderBy("doc_id"),
-                 tagged)
+    # the scoped (id, cell) cache rides from tagged onto kept, so both
+    # mixture arms of the timed plan read it (not 2 assign UDFs)
+    return kept[["doc_id", "cell"]].sort("doc_id", na_position="first").df
 
 
 def dup_ngram_spans_docs(spark, sf_dir):
@@ -3879,7 +3867,7 @@ def dup_span_popularity_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     q = dup_span_popularity(d, n=5)
-    return _keep(q.df.orderBy("min_docs"), q)
+    return q.sort("min_docs", na_position="first").df
 
 
 def dup_maximal_spans_docs(spark, sf_dir):

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import schema as _s
+from .cache_scope import carry as _carry
 
 __all__ = [
     "Table",
@@ -1014,8 +1015,9 @@ class Table:
         return self._df
 
     def _new(self, df: DataFrame) -> "Table":
-        """Subclass-preserving constructor (StreamTable ops stay streaming)."""
-        t = type(self)(df, self._name)
+        """Subclass-preserving constructor (StreamTable ops stay streaming).
+        The derived frame keeps the scoped caches this one holds."""
+        t = type(self)(_carry(df, self._df), self._name)
         t._fks = dict(self._fks)
         t._lineage = self._lineage | {t._token}
         return t
@@ -1762,13 +1764,14 @@ class Table:
 
 def _derived(df: DataFrame, *parents: Table) -> Table:
     """Build a Table whose lineage unions all parents' lineages (join,
-    concat, merge outputs are descendants of every input).  Preserves the
+    concat, merge outputs are descendants of every input) and which keeps
+    every parent's scoped caches.  Preserves the
     subclass when every parent agrees (a CachedTable's by()/join() result
     keeps consulting the shared memo; StreamTable results stay streaming) —
     mixed-parent derivations fall back to the plain Table."""
     cls = type(parents[0]) if parents and all(
         type(p) is type(parents[0]) for p in parents) else Table
-    t = cls(df)
+    t = cls(_carry(df, *(p._df for p in parents)))
     for p in parents:
         t._lineage = t._lineage | p._lineage
     # subclass-carried state: first parent wins (shared memo by design)

@@ -53,6 +53,14 @@ def connected_components(edges, src: str = "a", dst: str = "b",
     fine).  Isolated nodes don't appear — union the full node set and
     ``coalesce(component, node)`` downstream if needed (``canonical_docs``
     does exactly that).
+
+    Hop budget: the seeded census already takes one hash-min hop, and
+    each of the ``max_iter`` rounds takes one more, so labels are exact
+    on graphs whose diameter is at most ``max_iter + 1``.  Beyond that
+    the result is the truncated label after ``max_iter + 1`` hops — one
+    hop further than the r15 form (unseeded census, ``max_iter`` hops),
+    so on graphs with diameter > ``max_iter`` the labels can differ from
+    r15's.
     """
     e = _as_df(edges).select(F.col(src).cast("long").alias("u"),
                              F.col(dst).cast("long").alias("v"))

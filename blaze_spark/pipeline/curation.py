@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache_scope import carry
 from ..core import Table, _unary_pass
 from .text import quality_features
 
@@ -833,7 +834,7 @@ def apply_source_mix(t: Table, weights: DataFrame,
         joined = t.df.join(F.broadcast(checked), source_col)
         kept = joined.filter(
             (w >= 1.0) | ((w > 0.0) & (u < thr))).drop("sample_weight")
-        return Table(kept, t._name)
+        return Table(carry(kept, t.df), t._name)
     # upsampling path: floor(w) unconditional copies + one fractional
     # copy under the SAME md5 keep decision.  The fractional threshold
     # is over w − floor(w), so frac == 0 yields "00000000", which no
@@ -860,7 +861,7 @@ def apply_source_mix(t: Table, weights: DataFrame,
                              F.floor(w).cast(T.IntegerType()))))
     kept = cand.filter((F.col("copy_idx") < F.floor(w)) | (u < thr)) \
         .drop("sample_weight")
-    return Table(kept, t._name)
+    return Table(carry(kept, t.df), t._name)
 
 
 # any weight above this is a corrupt plan, not a mixture: even mT5's

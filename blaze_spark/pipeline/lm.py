@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache_scope import cache_scope, carry
 from ..core import Table
 from .curation import _tokens
 from .selection import _MAX_BUCKETS, _bucket_of, _validate_features
@@ -793,137 +794,131 @@ def ngram_lm_logprob(t: Table, reference: Table | None = None,
     # scoring pass — the fit's every (kind, bucket) row re-hashes a
     # bucket the scoring frame already computes, so derive the counts
     # from the persisted frame instead of a second scan (r15, guide
-    # §2.4; the persist is scoped to the result via _retain_cache).
+    # §2.4; the persist is scoped to the result).
     # Streaming frames keep the two-pass plan: persist() needs a
     # batch plan, and the streaming entry points score via counts=.
-    ex = None
-    if counts is None and reference is None and not prefer_literal \
-            and not t.df.isStreaming:
-        ladder_args = backoff is not None or interpolate is not None
-        kn_args = kneser_ney is not None
-        ex = _score_frame(
-            t.df, text_col, id_col, n_buckets, n,
-            range(n - 1, 1, -1) if (ladder_args or kn_args) else (),
-            ladder_args or kn_args, tokenizer).persist()
-        counts = _self_fit_counts(ex, n, ladder_args, kn_args)
-    model = _lm_model(t, reference, counts, text_col, n_buckets, n,
-                      smoothing, backoff, _fn_name, tokenizer,
-                      interpolate, kneser_ney)
-    self_fit = ex is not None
-    if model[0] == "kn":
-        out = _logprob_kn(t, model, text_col, id_col, n_buckets, n,
-                          smoothing, tokenizer, _ex=ex)
-        if ex is not None:
-            from .dedup import _retain_cache
-            _retain_cache(out, ex)
-        return out
+    with cache_scope() as scope:
+        ex = None
+        if counts is None and reference is None and not prefer_literal \
+                and not t.df.isStreaming:
+            ladder_args = backoff is not None or interpolate is not None
+            kn_args = kneser_ney is not None
+            ex = scope.persist(_score_frame(
+                t.df, text_col, id_col, n_buckets, n,
+                range(n - 1, 1, -1) if (ladder_args or kn_args) else (),
+                ladder_args or kn_args, tokenizer))
+            counts = _self_fit_counts(ex, n, ladder_args, kn_args)
+        model = _lm_model(t, reference, counts, text_col, n_buckets, n,
+                          smoothing, backoff, _fn_name, tokenizer,
+                          interpolate, kneser_ney)
+        if model[0] == "kn":
+            return scope.attach(
+                _logprob_kn(t, model, text_col, id_col, n_buckets, n,
+                            smoothing, tokenizer, _ex=ex))
 
-    if prefer_literal:
-        _, ln_g, ln_c, miss_g, miss_c = model
-        return _logprob_literal(t, ln_g, ln_c, miss_g, miss_c,
-                                text_col, id_col, n_buckets, n,
-                                tokenizer)
+        if prefer_literal:
+            _, ln_g, ln_c, miss_g, miss_c = model
+            return _logprob_literal(t, ln_g, ln_c, miss_g, miss_c,
+                                    text_col, id_col, n_buckets, n,
+                                    tokenizer)
 
-    spark = t.df.sparkSession
-    kind = model[0]
-    ln_g, ln_c = model[1], model[2]
-    lng = spark.createDataFrame(
-        [(int(b), v) for b, v in ln_g.items()],
-        "bucket long, lng double")
-    lnc = spark.createDataFrame(
-        [(int(b), v) for b, v in ln_c.items()],
-        "bucket long, lnc double")
-    laddered = kind in ("backoff", "interp")
-    levels = model[5] if laddered else []
-    if ex is None:
-        ex = _score_frame(t.df, text_col, id_col, n_buckets, n,
-                          [k for k, _, _ in levels], laddered,
-                          tokenizer)
-    joined = (ex
-              .join(F.broadcast(lng), ex["gb"] == lng["bucket"], "left")
-              .drop(lng["bucket"])
-              .join(F.broadcast(lnc), ex["cb"] == lnc["bucket"], "left")
-              .drop(lnc["bucket"]))
-    if laddered:
-        ln_u, miss_u = model[3], model[4]
-        for k, ln_gk, ln_ck in levels:
-            lgk = spark.createDataFrame(
-                [(int(b), v) for b, v in ln_gk.items()],
-                f"bucket long, lng{k} double")
-            lck = spark.createDataFrame(
-                [(int(b), v) for b, v in ln_ck.items()],
-                f"bucket long, lnc{k} double")
+        spark = t.df.sparkSession
+        kind = model[0]
+        ln_g, ln_c = model[1], model[2]
+        lng = spark.createDataFrame(
+            [(int(b), v) for b, v in ln_g.items()],
+            "bucket long, lng double")
+        lnc = spark.createDataFrame(
+            [(int(b), v) for b, v in ln_c.items()],
+            "bucket long, lnc double")
+        laddered = kind in ("backoff", "interp")
+        levels = model[5] if laddered else []
+        if ex is None:
+            ex = _score_frame(t.df, text_col, id_col, n_buckets, n,
+                              [k for k, _, _ in levels], laddered,
+                              tokenizer)
+        joined = (ex
+                  .join(F.broadcast(lng), ex["gb"] == lng["bucket"], "left")
+                  .drop(lng["bucket"])
+                  .join(F.broadcast(lnc), ex["cb"] == lnc["bucket"], "left")
+                  .drop(lnc["bucket"]))
+        if laddered:
+            ln_u, miss_u = model[3], model[4]
+            for k, ln_gk, ln_ck in levels:
+                lgk = spark.createDataFrame(
+                    [(int(b), v) for b, v in ln_gk.items()],
+                    f"bucket long, lng{k} double")
+                lck = spark.createDataFrame(
+                    [(int(b), v) for b, v in ln_ck.items()],
+                    f"bucket long, lnc{k} double")
+                joined = (joined
+                          .join(F.broadcast(lgk),
+                                joined[f"gb{k}"] == lgk["bucket"], "left")
+                          .drop(lgk["bucket"])
+                          .join(F.broadcast(lck),
+                                joined[f"cb{k}"] == lck["bucket"], "left")
+                          .drop(lck["bucket"]))
+            lnu = spark.createDataFrame(
+                [(int(b), v) for b, v in ln_u.items()],
+                "bucket long, lnu double")
             joined = (joined
-                      .join(F.broadcast(lgk),
-                            joined[f"gb{k}"] == lgk["bucket"], "left")
-                      .drop(lgk["bucket"])
-                      .join(F.broadcast(lck),
-                            joined[f"cb{k}"] == lck["bucket"], "left")
-                      .drop(lck["bucket"]))
-        lnu = spark.createDataFrame(
-            [(int(b), v) for b, v in ln_u.items()],
-            "bucket long, lnu double")
-        joined = (joined
-                  .join(F.broadcast(lnu),
-                        joined["ub"] == lnu["bucket"], "left")
-                  .drop(lnu["bucket"]))
-        back = F.coalesce(F.col("lnu"), F.lit(miss_u))
-        if kind == "interp":
-            # Jelinek–Mercer mixture chain, lowest order first: the
-            # unigram base is always present; an evidence-less order
-            # mixes in 0 (its λ-mass falls through).  exp/ln per gram
-            # — still codegen, and the ln() tables stay shared with
-            # backoff so the two schemes cannot drift.
-            lam = model[6]
-            p = F.exp(back)
-            for k, _, _ in reversed(levels):      # ascending 2..n−1
-                mle = F.when(
-                    F.col(f"lng{k}").isNotNull()
-                    & F.col(f"lnc{k}").isNotNull(),
-                    F.exp(F.col(f"lng{k}") - F.col(f"lnc{k}"))
+                      .join(F.broadcast(lnu),
+                            joined["ub"] == lnu["bucket"], "left")
+                      .drop(lnu["bucket"]))
+            back = F.coalesce(F.col("lnu"), F.lit(miss_u))
+            if kind == "interp":
+                # Jelinek–Mercer mixture chain, lowest order first: the
+                # unigram base is always present; an evidence-less order
+                # mixes in 0 (its λ-mass falls through).  exp/ln per gram
+                # — still codegen, and the ln() tables stay shared with
+                # backoff so the two schemes cannot drift.
+                lam = model[6]
+                p = F.exp(back)
+                for k, _, _ in reversed(levels):      # ascending 2..n−1
+                    mle = F.when(
+                        F.col(f"lng{k}").isNotNull()
+                        & F.col(f"lnc{k}").isNotNull(),
+                        F.exp(F.col(f"lng{k}") - F.col(f"lnc{k}"))
+                    ).otherwise(F.lit(0.0))
+                    p = F.lit(lam) * mle + F.lit(1.0 - lam) * p
+                mle_n = F.when(
+                    F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
+                    F.exp(F.col("lng") - F.col("lnc"))
                 ).otherwise(F.lit(0.0))
-                p = F.lit(lam) * mle + F.lit(1.0 - lam) * p
-            mle_n = F.when(
-                F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
-                F.exp(F.col("lng") - F.col("lnc"))
-            ).otherwise(F.lit(0.0))
-            per_gram = F.log(F.lit(lam) * mle_n
-                             + F.lit(1.0 - lam) * p)
-        elif not levels:
-            # n == 2: the r12 expression, verbatim
-            per_gram = F.when(
-                F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
-                F.greatest(F.col("lng") - F.col("lnc"), back)
-            ).otherwise(back)
+                per_gram = F.log(F.lit(lam) * mle_n
+                                 + F.lit(1.0 - lam) * p)
+            elif not levels:
+                # n == 2: the r12 expression, verbatim
+                per_gram = F.when(
+                    F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
+                    F.greatest(F.col("lng") - F.col("lnc"), back)
+                ).otherwise(back)
+            else:
+                # the order ladder: greatest() SKIPS NULL operands, so an
+                # evidence-less order simply falls out of the max; the
+                # unigram floor is always non-null.  Each level's λ-hop
+                # multiplier is already folded into its gram table.
+                cand = [F.when(
+                    F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
+                    F.col("lng") - F.col("lnc"))]
+                for k, _, _ in levels:
+                    cand.append(F.when(
+                        F.col(f"lng{k}").isNotNull()
+                        & F.col(f"lnc{k}").isNotNull(),
+                        F.col(f"lng{k}") - F.col(f"lnc{k}")))
+                cand.append(back)
+                per_gram = F.greatest(*cand)
         else:
-            # the order ladder: greatest() SKIPS NULL operands, so an
-            # evidence-less order simply falls out of the max; the
-            # unigram floor is always non-null.  Each level's λ-hop
-            # multiplier is already folded into its gram table.
-            cand = [F.when(
-                F.col("lng").isNotNull() & F.col("lnc").isNotNull(),
-                F.col("lng") - F.col("lnc"))]
-            for k, _, _ in levels:
-                cand.append(F.when(
-                    F.col(f"lng{k}").isNotNull()
-                    & F.col(f"lnc{k}").isNotNull(),
-                    F.col(f"lng{k}") - F.col(f"lnc{k}")))
-            cand.append(back)
-            per_gram = F.greatest(*cand)
-    else:
-        _, _, _, miss_g, miss_c = model
-        per_gram = (F.coalesce(F.col("lng"), F.lit(miss_g))
-                    - F.coalesce(F.col("lnc"), F.lit(miss_c)))
-    scored = (joined
-              .groupBy(id_col, "n_grams")
-              .agg(F.sum(F.when(F.col("ev"), per_gram)
-                         .otherwise(F.lit(0.0))).alias("s")))
-    out = scored.select(F.col(id_col), F.col("n_grams"),
-                        *_lm_exports())
-    if self_fit:
-        from .dedup import _retain_cache
-        _retain_cache(out, ex)
-    return out
+            _, _, _, miss_g, miss_c = model
+            per_gram = (F.coalesce(F.col("lng"), F.lit(miss_g))
+                        - F.coalesce(F.col("lnc"), F.lit(miss_c)))
+        scored = (joined
+                  .groupBy(id_col, "n_grams")
+                  .agg(F.sum(F.when(F.col("ev"), per_gram)
+                             .otherwise(F.lit(0.0))).alias("s")))
+        out = scored.select(F.col(id_col), F.col("n_grams"),
+                            *_lm_exports())
+        return scope.attach(out)
 
 
 def _logprob_literal(t: Table, ln_g: dict, ln_c: dict,
@@ -1116,8 +1111,7 @@ def perplexity_filter(t: Table, reference: Table | None = None,
     if min_ppl is not None:
         cond = cond & (key >= min_ppl)
     kept = scores.filter(F.col("ppl").isNotNull() & cond)
-    from .dedup import carry_caches
-    return carry_caches(t.df.join(kept, id_col, "inner"), scores)
+    return carry(t.df.join(kept, id_col, "inner"), scores)
 
 
 def perplexity_buckets(t: Table, reference: Table | None = None,
@@ -1195,38 +1189,35 @@ def perplexity_buckets(t: Table, reference: Table | None = None,
         id_col=id_col, n_buckets=n_buckets, n=n, smoothing=smoothing,
         backoff=backoff, tokenizer=tokenizer, interpolate=interpolate,
         kneser_ney=kneser_ney, _fn_name="perplexity_buckets")
-    scored = scores.filter(F.col("ppl").isNotNull())
-    if persist:
-        scored = scored.persist()
-    if by_col is not None:
-        keyed = t.df.select(id_col, by_col).join(scored, id_col)
-        thr = (keyed.groupBy(by_col)
-               .agg(F.percentile("ppl", qs).alias("__thr")))
-    else:
-        thr = scored.groupBy().agg(
-            F.percentile("ppl", qs).alias("__thr"))
-    joined = t.df.join(scored, id_col, "inner")
-    joined = (joined.join(F.broadcast(thr), by_col)
-              if by_col is not None
-              else joined.crossJoin(F.broadcast(thr)))
-    bucket = F.when(F.col("ppl") <= F.col("__thr")[0],
-                    F.lit(labels[0]))
-    for i in range(1, len(qs)):
-        bucket = bucket.when(F.col("ppl") <= F.col("__thr")[i],
-                             F.lit(labels[i]))
-    bucket = bucket.otherwise(F.lit(labels[-1]))
-    # pin the output order (joins reorder around their keys): the id,
-    # the corpus' remaining columns, the four LM exports, the bucket —
-    # the perplexity_filter convention + ppl_bucket
-    cols = ([id_col]
-            + [c for c in t.df.columns if c != id_col]
-            + [name for name, _ in _LM_SCHEMA] + ["ppl_bucket"])
-    out = joined.withColumn("ppl_bucket", bucket).select(*cols)
-    from .dedup import _retain_cache, carry_caches
-    carry_caches(out, scores)
-    if persist:
-        _retain_cache(out, scored)
-    return out
+    with cache_scope() as scope:
+        scored = scores.filter(F.col("ppl").isNotNull())
+        if persist:
+            scored = scope.persist(scored)
+        if by_col is not None:
+            keyed = t.df.select(id_col, by_col).join(scored, id_col)
+            thr = (keyed.groupBy(by_col)
+                   .agg(F.percentile("ppl", qs).alias("__thr")))
+        else:
+            thr = scored.groupBy().agg(
+                F.percentile("ppl", qs).alias("__thr"))
+        joined = t.df.join(scored, id_col, "inner")
+        joined = (joined.join(F.broadcast(thr), by_col)
+                  if by_col is not None
+                  else joined.crossJoin(F.broadcast(thr)))
+        bucket = F.when(F.col("ppl") <= F.col("__thr")[0],
+                        F.lit(labels[0]))
+        for i in range(1, len(qs)):
+            bucket = bucket.when(F.col("ppl") <= F.col("__thr")[i],
+                                 F.lit(labels[i]))
+        bucket = bucket.otherwise(F.lit(labels[-1]))
+        # pin the output order (joins reorder around their keys): the id,
+        # the corpus' remaining columns, the four LM exports, the bucket —
+        # the perplexity_filter convention + ppl_bucket
+        cols = ([id_col]
+                + [c for c in t.df.columns if c != id_col]
+                + [name for name, _ in _LM_SCHEMA] + ["ppl_bucket"])
+        out = joined.withColumn("ppl_bucket", bucket).select(*cols)
+        return scope.attach(out, scores)
 
 
 # ---------------------------------------------------------------------------

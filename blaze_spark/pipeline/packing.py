@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache_scope import cache_scope
 from ..core import Table
 
 __all__ = ["train_val_test_split", "pack_sequences", "chunk_documents"]
@@ -195,37 +196,36 @@ def pack_sequences(t: Table, budget: int, text_col: str = "text",
     # final plan otherwise EACH scan the corpus.  Purely a perf lever —
     # pid/n_tokens are deterministic projections, so a recompute (cache
     # eviction, dropped holder) reproduces identical values.
-    bucketed = base.withColumn("__pid", pid).persist()
+    with cache_scope() as scope:
+        bucketed = scope.persist(base.withColumn("__pid", pid))
 
-    from pyspark.sql import Window
-    w = (Window.partitionBy("__pid").orderBy(order_by)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    local = bucketed.withColumn("__cum", F.sum(cost).over(w))
+        from pyspark.sql import Window
+        w = (Window.partitionBy("__pid").orderBy(order_by)
+             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        local = bucketed.withColumn("__cum", F.sum(cost).over(w))
 
-    # one row per bucket: (pid, total) — tiny, driver-safe; bucket ids
-    # are ordinal in key order by construction
-    totals = (bucketed.groupBy("__pid")
-              .agg(F.sum(cost).alias("tot"))
-              .collect())
-    totals.sort(key=lambda r: r["__pid"])
-    rows, acc = [], 0
-    for r in totals:
-        rows.append((int(r["__pid"]), acc))
-        acc += int(r["tot"])
-    off_df = spark.createDataFrame(rows or [(0, 0)],
-                                   "__pid int, __off long")
-    out = (local.join(F.broadcast(off_df), "__pid", "left")
-           .withColumn("tok_start",
-                       (F.col("__cum") - F.col(cost)
-                        + F.coalesce(F.col("__off"), F.lit(0)))
-                       .cast("long"))
-           .withColumn("shard",
-                       F.floor(F.col("tok_start") / F.lit(budget))
-                       .cast("long"))
-           .drop("__pid", "__cum", "__off", "__cost"))
-    from .dedup import scoped_persist
-
-    return scoped_persist(Table(out, t._name), bucketed)
+        # one row per bucket: (pid, total) — tiny, driver-safe; bucket ids
+        # are ordinal in key order by construction
+        totals = (bucketed.groupBy("__pid")
+                  .agg(F.sum(cost).alias("tot"))
+                  .collect())
+        totals.sort(key=lambda r: r["__pid"])
+        rows, acc = [], 0
+        for r in totals:
+            rows.append((int(r["__pid"]), acc))
+            acc += int(r["tot"])
+        off_df = spark.createDataFrame(rows or [(0, 0)],
+                                       "__pid int, __off long")
+        out = (local.join(F.broadcast(off_df), "__pid", "left")
+               .withColumn("tok_start",
+                           (F.col("__cum") - F.col(cost)
+                            + F.coalesce(F.col("__off"), F.lit(0)))
+                           .cast("long"))
+               .withColumn("shard",
+                           F.floor(F.col("tok_start") / F.lit(budget))
+                           .cast("long"))
+               .drop("__pid", "__cum", "__off", "__cost"))
+        return Table(scope.attach(out), t._name)
 
 
 def chunk_documents(t: Table, max_tokens: int, overlap: int = 0,

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..cache_scope import cache_scope
 from ..core import Table
 from .curation import _tokens
 
@@ -170,42 +171,40 @@ def bm25_topk(corpus: Table, queries, k: int = 10,
     # shuffle.  hits is the skinny (doc, term, tf, dl) relation
     # (docs × query-vocabulary, not docs × vocabulary), scoped to the
     # result's lifetime (the perplexity_buckets posture).
-    if persist:
-        hits = hits.persist()
-    dfreq = hits.groupBy("term").agg(
-        F.count(F.lit(1)).cast(T.LongType()).alias("df"))
-    idf = F.log(F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5)))
-    contrib = (idf * F.col("tf") * F.lit(k1 + 1.0)
-               / (F.col("tf") + F.lit(k1)
-                  * (F.lit(1.0 - b)
-                     + F.lit(b) * F.col("dl") / F.col("avgdl"))))
-    scored = (hits.join(F.broadcast(dfreq), "term")
-              .crossJoin(F.broadcast(stats))
-              .withColumn("c_micro",
-                          F.round(contrib * _MICRO, 0)
-                          .cast(T.LongType()))
-              .join(F.broadcast(qterms), "term")
-              .groupBy("query_id", "doc_id")
-              .agg(F.sum("c_micro").alias("s_micro")))
-    local_w = Window.partitionBy(
-        "query_id", F.pmod(F.xxhash64("doc_id"), F.lit(_SALT))).orderBy(
-        F.col("s_micro").desc(), F.col("doc_id"))
-    final_w = Window.partitionBy("query_id").orderBy(
-        F.col("s_micro").desc(), F.col("doc_id"))
-    out = (scored
-           .withColumn("__lr", F.row_number().over(local_w))
-           .filter(F.col("__lr") <= k)
-           .withColumn("__r", F.row_number().over(final_w))
-           .filter(F.col("__r") <= k)
-           .select("query_id", "doc_id",
-                   (F.round(F.col("s_micro") / F.lit(float(_MICRO)),
-                            round_to) + F.lit(0.0)).alias("score")))
-    if persist:
-        from .dedup import _retain_cache
-        _retain_cache(out, hits)
-    return Table(out, "bm25_topk")
+    with cache_scope() as scope:
+        if persist:
+            hits = scope.persist(hits)
+        dfreq = hits.groupBy("term").agg(
+            F.count(F.lit(1)).cast(T.LongType()).alias("df"))
+        idf = F.log(F.lit(1.0)
+                    + (F.col("n_docs") - F.col("df") + F.lit(0.5))
+                    / (F.col("df") + F.lit(0.5)))
+        contrib = (idf * F.col("tf") * F.lit(k1 + 1.0)
+                   / (F.col("tf") + F.lit(k1)
+                      * (F.lit(1.0 - b)
+                         + F.lit(b) * F.col("dl") / F.col("avgdl"))))
+        scored = (hits.join(F.broadcast(dfreq), "term")
+                  .crossJoin(F.broadcast(stats))
+                  .withColumn("c_micro",
+                              F.round(contrib * _MICRO, 0)
+                              .cast(T.LongType()))
+                  .join(F.broadcast(qterms), "term")
+                  .groupBy("query_id", "doc_id")
+                  .agg(F.sum("c_micro").alias("s_micro")))
+        local_w = Window.partitionBy(
+            "query_id", F.pmod(F.xxhash64("doc_id"), F.lit(_SALT))).orderBy(
+            F.col("s_micro").desc(), F.col("doc_id"))
+        final_w = Window.partitionBy("query_id").orderBy(
+            F.col("s_micro").desc(), F.col("doc_id"))
+        out = (scored
+               .withColumn("__lr", F.row_number().over(local_w))
+               .filter(F.col("__lr") <= k)
+               .withColumn("__r", F.row_number().over(final_w))
+               .filter(F.col("__r") <= k)
+               .select("query_id", "doc_id",
+                       (F.round(F.col("s_micro") / F.lit(float(_MICRO)),
+                                round_to) + F.lit(0.0)).alias("score")))
+        return Table(scope.attach(out), "bm25_topk")
 
 
 # ---------------------------------------------------------------------------

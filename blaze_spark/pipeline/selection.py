@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache_scope import cache_scope
 from ..core import Table
 from .curation import _tokens, ngram_array
 
@@ -577,12 +578,12 @@ def train_quality_classifier(t: Table, label, text_col: str = "text",
     feats = _spread(t.df, text_col).select(y, F.coalesce(
         ngram_buckets(c, n_buckets, n),
         F.array().cast(T.ArrayType(T.LongType()))).alias("bks"))
-    if persist:
-        feats = feats.persist()
     w: dict = {}
     b0 = 0
     history: list = []
-    try:
+    with cache_scope() as scope:
+        if persist:
+            feats = scope.persist(feats)
         if init_intercept:
             import math
 
@@ -644,9 +645,6 @@ def train_quality_classifier(t: Table, label, text_col: str = "text",
                     w[b] = nw
                 else:
                     w.pop(b, None)
-    finally:
-        if persist:
-            feats.unpersist()
     return TrainedQualityModel(w, b0, n_buckets, n, history)
 
 

@@ -20,6 +20,7 @@ from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache_scope import cache_scope
 from ..core import Table
 
 
@@ -34,23 +35,6 @@ def _dot(a, b) -> Column:
 
 def _norm(a) -> Column:
     return F.sqrt(_dot(a, a))
-
-
-def _signature_udf(planes: np.ndarray):
-    """Arrow-batched numpy signature: one (batch x dim) @ (dim x planes)
-    matmul per batch — the vectorized-pandas-UDF fast path for embedding
-    math (per-element JVM lambdas are ~10x slower here)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _sig(s):
-        m = np.stack(s.to_numpy())            # (batch, dim)
-        bits = (m.astype(np.float64) @ planes.T) > 0   # (batch, n_planes)
-        weights = (1 << np.arange(planes.shape[0])).astype(np.int64)
-        return pd.Series(bits @ weights)
-
-    _sig.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(_sig, "long")
 
 
 def _pair_cosine_udf():
@@ -322,87 +306,84 @@ def embedding_neardup_pairs(corpus: Table, threshold: float = 0.9,
     final pair-keyed groupBy.  ``max_bucket`` blacklists degenerate
     buckets via broadcast anti join.  ``exact=True`` does the brute-force
     quadratic scoring — the oracle path for small corpora."""
-    c = corpus.df.select(F.col(id_col).alias("vid"),
-                         F.col(vec_col).alias("v"),
-                         _norm(F.col(vec_col)).alias("n"))
-    if not exact:
-        # the LSH path reads the corpus repeatedly (param count, signature
-        # pass, and the two vector re-joins) — persist ONCE, scoped to the
-        # returned result's lifetime (see dedup._retain_cache)
-        c = c.persist()
-    if exact:
-        l, r = c.alias("l"), c.alias("r")
-        cos = _dot(F.col("l.v"), F.col("r.v")) / (F.col("l.n") * F.col("r.n"))
-        scored = l.join(r, F.col("l.vid") < F.col("r.vid")).select(
-            F.col("l.vid").alias("vec_a"), F.col("r.vid").alias("vec_b"),
-            cos.alias("cosine"))
-    else:
-        if n_planes is None or n_tables is None:
-            # auto-size from the corpus count; ``n_vectors`` lets callers
-            # who know it (or can estimate it from catalog stats) skip the
-            # extra corpus pass — production paths should pass it
-            n = n_vectors if n_vectors is not None else c.count()
-            auto_p, auto_t = lsh_auto_params(n, threshold)
-            n_planes = auto_p if n_planes is None else n_planes
-            n_tables = auto_t if n_tables is None else n_tables
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((n_tables * n_planes, dim))
-        sig_udf = _multi_signature_udf(planes, n_tables, n_planes)
-        # ID-ONLY candidate topology (same as lsh_cosine_topk): vectors
-        # ride neither the banding explode nor the bucket groupBy, and the
-        # cosine is NOT computed per-pair inside array lambdas — Catalyst
-        # higher-order functions are interpreted, and an in-array
-        # aggregate() dot per candidate measured ~10x slower than scoring
-        # the re-joined pairs with one Arrow-batched numpy matmul.
-        # entries is tiny (3 longs x N·tables) but costs an Arrow UDF pass
-        # over the corpus — persist so the hot-bucket count and the two
-        # sides of the pair self-join share one signature computation
-        entries = (c.select("vid", sig_udf(F.col("v")).alias("sigs"))
-                   .select("vid", F.posexplode("sigs").alias("tbl", "sig"))
-                   .persist())
-        hot = (entries.groupBy("tbl", "sig")
-               .agg(F.count(F.lit(1)).alias("cnt"))
-               .filter(F.col("cnt") > max_bucket).select("tbl", "sig"))
-        cold = entries.join(F.broadcast(hot), ["tbl", "sig"], "left_anti")
-        # Pair generation is an ID-ONLY equi-self-join on (table, sig) —
-        # WholeStageCodegen end to end.  The in-array alternative
-        # (collect_list + transform i<j pairing) evaluates Catalyst
-        # lambdas INTERPRETED per emitted pair: at sf1's 6.5M candidates
-        # that measured 45 s vs ~8 s for this join, and the gap widens
-        # with scale.  Joining ids costs two shuffles of (id, tbl, sig)
-        # rows — O(N·tables) longs, never vectors — and the join output
-        # pipelines straight into the pair-dedup aggregation without
-        # materializing.  (dedup.lsh_band_pairs keeps the in-array form:
-        # shingle-text buckets stay tiny under its max_bucket, where the
-        # collect_list saves the second shuffle.)
-        pairs = (cold.alias("l")
-                 .join(cold.alias("r"), ["tbl", "sig"])
-                 .filter(F.col("l.vid") < F.col("r.vid"))
-                 .select(F.col("l.vid").alias("vec_a"),
-                         F.col("r.vid").alias("vec_b"))
-                 .distinct())              # shuffle carries two ids per pair
-        # norms computed ONCE per vector (N rows), carried as one double
-        # through the id-keyed joins; the per-pair dot is the zip_with/
-        # aggregate form (see cosine_topk's note — the unrolled SQL
-        # variant measured 3.5x slower and was reverted in r5)
-        av = c.select(F.col("vid").alias("vec_a"), F.col("v").alias("va"),
-                      F.col("n").alias("na"))
-        bv = c.select(F.col("vid").alias("vec_b"), F.col("v").alias("vb"),
-                      F.col("n").alias("nb"))
-        joined = pairs.join(av, "vec_a").join(bv, "vec_b")
-        cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        scored = (joined.withColumn("cosine", cos)
-                  .select("vec_a", "vec_b", "cosine"))
-    out = scored.filter(F.col("cosine") >= threshold)
-    if round_to is not None:
-        out = out.withColumn("cosine",
-                                F.round("cosine", round_to) + F.lit(0.0))
-    if not exact:
-        from .dedup import _retain_cache
-
-        _retain_cache(out, c)
-        _retain_cache(out, entries)
-    return Table(out, "embedding_neardup_pairs")
+    with cache_scope() as scope:
+        c = corpus.df.select(F.col(id_col).alias("vid"),
+                             F.col(vec_col).alias("v"),
+                             _norm(F.col(vec_col)).alias("n"))
+        if not exact:
+            # the LSH path reads the corpus repeatedly (param count, signature
+            # pass, and the two vector re-joins) — persist ONCE, scoped to the
+            # returned result's lifetime
+            c = scope.persist(c)
+        if exact:
+            l, r = c.alias("l"), c.alias("r")
+            cos = (_dot(F.col("l.v"), F.col("r.v"))
+                   / (F.col("l.n") * F.col("r.n")))
+            scored = l.join(r, F.col("l.vid") < F.col("r.vid")).select(
+                F.col("l.vid").alias("vec_a"), F.col("r.vid").alias("vec_b"),
+                cos.alias("cosine"))
+        else:
+            if n_planes is None or n_tables is None:
+                # auto-size from the corpus count; ``n_vectors`` lets callers
+                # who know it (or can estimate it from catalog stats) skip the
+                # extra corpus pass — production paths should pass it
+                n = n_vectors if n_vectors is not None else c.count()
+                auto_p, auto_t = lsh_auto_params(n, threshold)
+                n_planes = auto_p if n_planes is None else n_planes
+                n_tables = auto_t if n_tables is None else n_tables
+            rng = np.random.default_rng(seed)
+            planes = rng.standard_normal((n_tables * n_planes, dim))
+            sig_udf = _multi_signature_udf(planes, n_tables, n_planes)
+            # ID-ONLY candidate topology (same as lsh_cosine_topk): vectors
+            # ride neither the banding explode nor the bucket groupBy, and the
+            # cosine is NOT computed per-pair inside array lambdas — Catalyst
+            # higher-order functions are interpreted, and an in-array
+            # aggregate() dot per candidate measured ~10x slower than scoring
+            # the re-joined pairs with one Arrow-batched numpy matmul.
+            # entries is tiny (3 longs x N·tables) but costs an Arrow UDF pass
+            # over the corpus — persist so the hot-bucket count and the two
+            # sides of the pair self-join share one signature computation
+            entries = scope.persist(
+                c.select("vid", sig_udf(F.col("v")).alias("sigs"))
+                .select("vid", F.posexplode("sigs").alias("tbl", "sig")))
+            hot = (entries.groupBy("tbl", "sig")
+                   .agg(F.count(F.lit(1)).alias("cnt"))
+                   .filter(F.col("cnt") > max_bucket).select("tbl", "sig"))
+            cold = entries.join(F.broadcast(hot), ["tbl", "sig"], "left_anti")
+            # Pair generation is an ID-ONLY equi-self-join on (table, sig) —
+            # WholeStageCodegen end to end.  The in-array alternative
+            # (collect_list + transform i<j pairing) evaluates Catalyst
+            # lambdas INTERPRETED per emitted pair: at sf1's 6.5M candidates
+            # that measured 45 s vs ~8 s for this join, and the gap widens
+            # with scale.  Joining ids costs two shuffles of (id, tbl, sig)
+            # rows — O(N·tables) longs, never vectors — and the join output
+            # pipelines straight into the pair-dedup aggregation without
+            # materializing.  (dedup.lsh_band_pairs keeps the in-array form:
+            # shingle-text buckets stay tiny under its max_bucket, where the
+            # collect_list saves the second shuffle.)
+            pairs = (cold.alias("l")
+                     .join(cold.alias("r"), ["tbl", "sig"])
+                     .filter(F.col("l.vid") < F.col("r.vid"))
+                     .select(F.col("l.vid").alias("vec_a"),
+                             F.col("r.vid").alias("vec_b"))
+                     .distinct())          # shuffle carries two ids per pair
+            # norms computed ONCE per vector (N rows), carried as one double
+            # through the id-keyed joins; the per-pair dot is the zip_with/
+            # aggregate form (see cosine_topk's note — the unrolled SQL
+            # variant measured 3.5x slower and was reverted in r5)
+            av = c.select(F.col("vid").alias("vec_a"), F.col("v").alias("va"),
+                          F.col("n").alias("na"))
+            bv = c.select(F.col("vid").alias("vec_b"), F.col("v").alias("vb"),
+                          F.col("n").alias("nb"))
+            joined = pairs.join(av, "vec_a").join(bv, "vec_b")
+            cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+            scored = (joined.withColumn("cosine", cos)
+                      .select("vec_a", "vec_b", "cosine"))
+        out = scored.filter(F.col("cosine") >= threshold)
+        if round_to is not None:
+            out = out.withColumn("cosine",
+                                    F.round("cosine", round_to) + F.lit(0.0))
+        return Table(scope.attach(out), "embedding_neardup_pairs")
 
 
 def lsh_cosine_topk(corpus: Table, queries: Table, k: int = 5,
@@ -711,29 +692,7 @@ def pq_neardup_pairs(corpus: Table, threshold: float = 0.9,
                       or vec_col in codes.df.columns))
     bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_batches))
     parts = []
-    codes_release = None
-    if n_batches > 1:
-        # guide §5 (r15): every chunk's candidate scan reads the codes
-        # relation, and a DERIVED codes frame (pq_encode over a float
-        # corpus) re-ran the full assign+encode once PER CHUNK — at 22
-        # chunks that is 22 corpus encodes for one dedup pass.  Persist
-        # it for the life of the eager chunk loop; the scope is
-        # construction-only (released in the finally: the returned plan
-        # reads the checkpointed chunk candidates and the float corpus,
-        # never the codes).  Codes are the 32x-smaller-by-design
-        # relation, so the cache is bounded the same way the store is.
-        # The persist/release rides the refcounted acquire (ADVICE r15):
-        # if the caller already persisted an identical codes frame, the
-        # JVM shares one cache entry and a raw unpersist here would
-        # silently un-cache the caller's survivor.  An already-cached
-        # codes object (caller-owned raw persist, which the refcount
-        # never saw) is left entirely alone — their entry, their
-        # lifetime.
-        from .dedup import acquire_cache
 
-        if not codes.df.is_cached:
-            codes_release = acquire_cache(codes.df)
-        codes = Table(codes.df, "pq_neardup_codes")
     def _one_chunk(i: int):
         chunk = (corpus if n_batches == 1
                  else Table(corpus.df.filter(bucket == F.lit(i))))
@@ -758,8 +717,22 @@ def pq_neardup_pairs(corpus: Table, threshold: float = 0.9,
             bc.destroy()
         return pairs
 
-    try:
+    with cache_scope() as scope:
         if n_batches > 1:
+            # guide §5 (r15): every chunk's candidate scan reads the codes
+            # relation, and a DERIVED codes frame (pq_encode over a float
+            # corpus) re-ran the full assign+encode once PER CHUNK — at 22
+            # chunks that is 22 corpus encodes for one dedup pass.  Persist
+            # it for the life of the eager chunk loop; the scope is
+            # construction-only (released on leaving it: the returned plan
+            # reads the checkpointed chunk candidates and the float corpus,
+            # never the codes).  Codes are the 32x-smaller-by-design
+            # relation, so the cache is bounded the same way the store is.
+            # The persist rides the refcounted scope (ADVICE r15): if the
+            # caller already persisted an identical codes frame, the JVM
+            # shares one cache entry and a raw unpersist here would silently
+            # un-cache the caller's survivor.
+            codes = Table(scope.persist(codes.df), "pq_neardup_codes")
             # guide §2.6 (r16): the chunk scans are independent jobs
             # over the cached codes relation — a two-wide pool lets the
             # next chunk's tasks back-fill the current chunk's
@@ -774,9 +747,6 @@ def pq_neardup_pairs(corpus: Table, threshold: float = 0.9,
                          if p is not None]
         else:
             parts = [p for p in (_one_chunk(0),) if p is not None]
-    finally:
-        if codes_release is not None:
-            codes_release()
     if not parts:
         return Table(spark.createDataFrame(
             [], "vec_a long, vec_b long, cosine double"),
@@ -1001,64 +971,60 @@ def semantic_dedup(corpus: Table, threshold: float = 0.95,
     # one cache — previously the returned plan re-derived scan + assign
     # UDF because the projection cache was released at construction
     # time (r16, guide §5; the r15 finding-#9 pattern one layer down).
-    # Scope: _retain_cache ties the release to the result frame.
-    from .dedup import _retain_cache
+    # The scope ties the release to the result frame.
+    with cache_scope() as scope:
+        # the norm rides IN the cache (not recomputed per read): av/bv below
+        # each re-read the corpus, and the aggregate-HOF norm is the
+        # expensive projection
+        tagged = scope.persist(
+            ivf_assign(corpus, centroids, vec_col).df
+            .withColumn("__semdedup_norm", _norm(F.col(vec_col))))
+        c = tagged.select(F.col(id_col).alias("vid"),
+                          F.col(vec_col).alias("v"),
+                          F.col("__semdedup_norm").alias("n"),
+                          "cell")
+        hot = (c.groupBy("cell")
+               .agg(F.count(F.lit(1)).alias("cnt"))
+               .filter(F.col("cnt") > max_cell).select("cell"))
+        ids = c.select("vid", "cell") \
+            .join(F.broadcast(hot), "cell", "left_anti")
+        pairs = (ids.alias("l").join(ids.alias("r"), "cell")
+                 .filter(F.col("l.vid") < F.col("r.vid"))
+                 .select(F.col("l.vid").alias("vec_a"),
+                         F.col("r.vid").alias("vec_b")))
+        av = c.select(F.col("vid").alias("vec_a"),
+                      F.col("v").alias("va"), F.col("n").alias("na"))
+        bv = c.select(F.col("vid").alias("vec_b"),
+                      F.col("v").alias("vb"), F.col("n").alias("nb"))
+        cos = _dot(F.col("va"), F.col("vb")) / \
+            (F.col("na") * F.col("nb"))
+        dups = (pairs.join(av, "vec_a").join(bv, "vec_b")
+                .withColumn("cosine", cos)
+                .filter(F.col("cosine") >= threshold)
+                .select("vec_a", "vec_b"))
+        # canonical_docs' label propagation runs its eager bounded rounds
+        # HERE (reading the cache); the returned join keeps reading it.
+        # __n is cache-internal — drop it from the annotated result.
+        out = canonical_docs(Table(tagged, "semantic_dedup"), dups,
+                             id_col=id_col, left="vec_a",
+                             right="vec_b", max_iter=max_iter)
+        out = Table(out.df.drop("__semdedup_norm"), "semantic_dedup")
+        if keep == "min_id":
+            return Table(scope.attach(out.df), "semantic_dedup")
+        # the paper's rule: within each cluster the survivor is the member
+        # FARTHEST from its cell centroid (lowest cosine); one window over
+        # cluster_id (clusters are pair-bounded and small)
+        from pyspark.sql import Window
 
-    # the norm rides IN the cache (not recomputed per read): av/bv below
-    # each re-read the corpus, and the aggregate-HOF norm is the
-    # expensive projection
-    tagged = (ivf_assign(corpus, centroids, vec_col).df
-              .withColumn("__semdedup_norm", _norm(F.col(vec_col))).persist())
-    c = tagged.select(F.col(id_col).alias("vid"),
-                      F.col(vec_col).alias("v"),
-                      F.col("__semdedup_norm").alias("n"),
-                      "cell")
-    hot = (c.groupBy("cell")
-           .agg(F.count(F.lit(1)).alias("cnt"))
-           .filter(F.col("cnt") > max_cell).select("cell"))
-    ids = c.select("vid", "cell") \
-        .join(F.broadcast(hot), "cell", "left_anti")
-    pairs = (ids.alias("l").join(ids.alias("r"), "cell")
-             .filter(F.col("l.vid") < F.col("r.vid"))
-             .select(F.col("l.vid").alias("vec_a"),
-                     F.col("r.vid").alias("vec_b")))
-    av = c.select(F.col("vid").alias("vec_a"),
-                  F.col("v").alias("va"), F.col("n").alias("na"))
-    bv = c.select(F.col("vid").alias("vec_b"),
-                  F.col("v").alias("vb"), F.col("n").alias("nb"))
-    cos = _dot(F.col("va"), F.col("vb")) / \
-        (F.col("na") * F.col("nb"))
-    dups = (pairs.join(av, "vec_a").join(bv, "vec_b")
-            .withColumn("cosine", cos)
-            .filter(F.col("cosine") >= threshold)
-            .select("vec_a", "vec_b"))
-    # canonical_docs' label propagation runs its eager bounded rounds
-    # HERE (reading the cache); the returned join keeps reading it.
-    # __n is cache-internal — drop it from the annotated result.
-    out = canonical_docs(Table(tagged, "semantic_dedup"), dups,
-                         id_col=id_col, left="vec_a",
-                         right="vec_b", max_iter=max_iter)
-    out = Table(out.df.drop("__semdedup_norm"), "semantic_dedup")
-    if keep == "min_id":
-        res = Table(out.df, "semantic_dedup")
-        _retain_cache(res.df, tagged)
-        return res
-    # the paper's rule: within each cluster the survivor is the member
-    # FARTHEST from its cell centroid (lowest cosine); one window over
-    # cluster_id (clusters are pair-bounded and small)
-    from pyspark.sql import Window
-
-    ranked = out.df.withColumn(
-        "_cc", _centroid_cos_udf(centroids)(F.col(vec_col),
-                                            F.col("cell")))
-    w = Window.partitionBy("cluster_id") \
-        .orderBy(F.col("_cc").asc(), F.col(id_col).asc())
-    ranked = (ranked
-              .withColumn("keep", F.row_number().over(w) == 1)
-              .drop("_cc"))
-    res = Table(ranked, "semantic_dedup")
-    _retain_cache(res.df, tagged)
-    return res
+        ranked = out.df.withColumn(
+            "_cc", _centroid_cos_udf(centroids)(F.col(vec_col),
+                                                F.col("cell")))
+        w = Window.partitionBy("cluster_id") \
+            .orderBy(F.col("_cc").asc(), F.col(id_col).asc())
+        ranked = (ranked
+                  .withColumn("keep", F.row_number().over(w) == 1)
+                  .drop("_cc"))
+        return Table(scope.attach(ranked), "semantic_dedup")
 
 
 def assign_clusters(docs: Table, embeddings: Table,
@@ -1098,7 +1064,6 @@ def assign_clusters(docs: Table, embeddings: Table,
                 f"assign_clusters: docs already has a '{taken}' "
                 "column — rename or drop it first (the assignment "
                 "join would produce an ambiguous column)")
-    from .dedup import _retain_cache
     from .ivf import ivf_assign, kmeans_fit
 
     if centroids is None:
@@ -1112,16 +1077,16 @@ def assign_clusters(docs: Table, embeddings: Table,
     # (plan-measured: 2 ArrowEvalPython nodes in the benched
     # cluster_mix plan).  The cache is two columns per embedding row —
     # bounded the way the at-rest cell index is (r16, guide §5).
-    cells = (ivf_assign(embeddings, centroids, vec_col).df
-             .select(F.col(id_col).alias("__aid"),
-                     F.col("cell").cast("int").alias("cell"))
-             .persist())
-    out = (docs.df
-           .join(cells, F.col(doc_id_col) == F.col("__aid"), "left")
-           .drop("__aid")
-           .withColumn("cell", F.coalesce(F.col("cell"), F.lit(-1))))
-    _retain_cache(out, cells)
-    return Table(out, "assign_clusters")
+    with cache_scope() as scope:
+        cells = scope.persist(
+            ivf_assign(embeddings, centroids, vec_col).df
+            .select(F.col(id_col).alias("__aid"),
+                    F.col("cell").cast("int").alias("cell")))
+        out = (docs.df
+               .join(cells, F.col(doc_id_col) == F.col("__aid"), "left")
+               .drop("__aid")
+               .withColumn("cell", F.coalesce(F.col("cell"), F.lit(-1))))
+        return Table(scope.attach(out), "assign_clusters")
 
 
 from ..core import _localize_guard as _lg  # noqa: E402

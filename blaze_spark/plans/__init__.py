@@ -35,10 +35,6 @@ def pushed_filters(t) -> str:
                      if "PushedFilters" in l or "ReadSchema" in l)
 
 
-def has_pushed_filter(t, fragment: str) -> bool:
-    return fragment in pushed_filters(t)
-
-
 def scan_columns(t) -> list[str]:
     """Columns actually read from the source (column-pruning check)."""
     import re

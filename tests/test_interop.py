@@ -76,6 +76,18 @@ def test_cached_table(t):
     assert len(cache) == 2
 
 
+def test_cached_table_hash_collision_is_not_a_hit(t, monkeypatch):
+    """The semantic hash is 32-bit: two different plans sharing it must
+    each get their own result, never the other's memo entry."""
+    cache = CachedTable()
+    monkeypatch.setattr(type(t.df), "semanticHash", lambda self: 7)
+    a = cache.compute(t[t.amount > 75])
+    b = cache.compute(t[t.amount > 100])
+    assert len(a) == 2 and len(b) == 1
+    assert cache.compute(t[t.amount > 75]) is a  # a true hit still hits
+    assert len(cache) == 2
+
+
 def test_cached_table_entry_cap_not_memoized(t):
     """VERDICT r5 #5: a result larger than max_entry_bytes is returned
     but never stored — the driver memo cannot grow past its caps."""

@@ -9,6 +9,7 @@ that it actually happens through our API surface.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from blaze_spark import by, join
@@ -326,15 +327,14 @@ def test_identical_plan_cache_survives_first_holder_release(spark):
     reads its cache, and the LAST release still unpersists (no leak)."""
     import gc
 
-    from blaze_spark.pipeline.dedup import _retain_cache
+    from blaze_spark.cache_scope import cache_scope
 
     def build():
-        cached = (spark.range(1000)
-                  .selectExpr("id", "id * 37 as cache_race_probe")
-                  .persist())
-        out = cached.groupBy().sum("cache_race_probe")
-        _retain_cache(out, cached)
-        return out
+        with cache_scope() as scope:
+            cached = scope.persist(
+                spark.range(1000)
+                .selectExpr("id", "id * 37 as cache_race_probe"))
+            return scope.attach(cached.groupBy().sum("cache_race_probe"))
 
     a = build()
     b = build()  # persist() no-ops: same canonical plan as a's
@@ -353,29 +353,29 @@ def test_identical_plan_cache_survives_first_holder_release(spark):
     assert "InMemoryTableScan" not in plan, plan  # leaked cache entry
 
 
-def test_acquire_cache_scope_shares_the_refcounted_entry(spark):
+def test_construction_scope_shares_the_refcounted_entry(spark):
     """ADVICE r15: pq_neardup_pairs' construction-scoped codes persist
     used a raw persist()/unpersist() pair, bypassing the refcounted
     release — if the caller had persisted an identical codes frame
     (shared JVM cache entry), the scope's release silently un-cached
-    the caller's survivor.  Pin acquire_cache: a release inside the
-    scope leaves the identically-planned holder's cache readable, and
+    the caller's survivor.  Pin the construction-only cache_scope: its
+    release leaves the identically-planned holder's cache readable, and
     the holder's own release still frees the entry (no leak)."""
     import gc
 
-    from blaze_spark.pipeline.dedup import _retain_cache, acquire_cache
+    from blaze_spark.cache_scope import cache_scope
 
     def frame():
         return spark.range(1000).selectExpr(
             "id", "id * 41 as acquire_scope_probe")
 
-    cached = frame().persist()
-    holder = cached.groupBy().sum("acquire_scope_probe")
-    _retain_cache(holder, cached)
+    with cache_scope() as scope:
+        cached = scope.persist(frame())
+        holder = scope.attach(cached.groupBy().sum("acquire_scope_probe"))
 
-    release = acquire_cache(frame())  # identical plan: shares the entry
-    release()
-    release()  # idempotent
+    with cache_scope() as scope:  # nothing attached: released on exit
+        scope.persist(frame())  # identical plan: shares the entry
+    scope.__exit__(None, None, None)  # idempotent
     plan = holder._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan, plan  # survivor kept its cache
 
@@ -386,24 +386,56 @@ def test_acquire_cache_scope_shares_the_refcounted_entry(spark):
     assert "InMemoryTableScan" not in plan, plan  # leaked cache entry
 
 
-def test_entry_return_frames_carry_the_scoped_caches(spark, sf_dir):
+# every entry that derives its returned order from a cache-holding
+# pipeline result, with the InMemoryTableScan count its plan must keep
+_CACHE_CARRYING_ENTRIES = {
+    "bloom_two_phase_decontam_docs": 1,
+    "bm25_topk_docs": 1,
+    "cluster_mix_docs": 1,
+    "dup_span_popularity_docs": 3,
+    "neardup_dispatch_pairs": 1,
+    "ngram_lm_backoff3_docs": 1,
+    "ngram_lm_backoff_docs": 1,
+    "ngram_lm_docs": 1,
+    "ngram_lm_interp_docs": 1,
+    "ngram_lm_kn_docs": 1,
+    "pack_bpe_docs": 1,
+    "pack_sep_docs": 1,
+    "pack_sequences_docs": 1,
+    "pack_sequences_string_key": 1,
+    "pack_tokenized_docs": 1,
+    "pack_wordpiece_docs": 1,
+    "perplexity_buckets_docs": 1,
+    "perplexity_filter_docs": 1,
+    "semantic_dedup_embeddings": 1,
+    "training_shards_pipeline": 1,
+    "winnow_candidates_docs": 1,
+}
+
+
+@pytest.mark.parametrize("name, scans", [
+    pytest.param(n, s, id=n)
+    for n, s in sorted(_CACHE_CARRYING_ENTRIES.items())])
+def test_entry_return_frames_carry_the_scoped_caches(spark, sf_dir, name,
+                                                     scans):
     """r15: deriving the oracle order with .df.orderBy(...) returns a
     frame WITHOUT the Python-side cache holder, so the scoped persists
     were silently released before the driver's timed action ran (the
     benched popularity plan re-scanned parquet 5x).  Pin the fix at
     the driver surface: the ENTRY's returned frame must still carry
-    the caches and its executed plan must read them."""
+    the caches and its executed plan must read them — now through
+    Table ops, which carry the caches onto every derived frame."""
     import gc
 
     import __spark_entry__ as entry
 
-    df = entry.queries()["dup_span_popularity_docs"](spark, sf_dir)
+    df = entry.queries()[name](spark, sf_dir)
     try:
         gc.collect()
         assert getattr(df, "_blaze_caches", None), \
             "entry dropped its scoped caches"
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("InMemoryTableScan") >= 3, plan
+        assert plan.count("InMemoryTableScan") >= scans, plan
     finally:
         for c in getattr(df, "_blaze_caches", ()):
             c.unpersist()
